@@ -299,16 +299,15 @@ class TestPointerDoubling:
 
 
 class TestDriverFastpathLockstep:
-    """The r15 whole-closure driver fast path must agree with the
-    distributed loop row-for-row on every golden scenario shape; the
-    loop is forced by shrinking the collect bounds to zero."""
+    """The all-resident driver closure must agree with the distributed
+    loop row-for-row on every golden scenario shape; the loop is forced
+    by shrinking the residency bound to zero."""
 
     def _both(self, monkeypatch, catalog, full=(), partial=None, spark=None):
         from xdump_spark.planner import closure as C
 
         fast = compute_closure(catalog, full, dict(partial or {}), spark=spark)
         monkeypatch.setattr(C, "DRIVER_CLOSURE_LIMIT", 0)
-        monkeypatch.setattr(C, "DRIVER_SELF_CLOSURE_LIMIT", 0)
         slow = compute_closure(catalog, full, dict(partial or {}), spark=spark)
         assert set(fast) == set(slow)
         for t in fast:
@@ -366,3 +365,203 @@ class TestDriverFastpathLockstep:
             monkeypatch, cat, partial={"nodes": nodes.filter("nid = 50")}
         )
         assert ids(out["nodes"], "nid") == {10, 20, 30, 40, 50}
+
+
+def _cat(spark, tables, fks):
+    """A catalog from ``{name: (rows, ddl)}`` and (child, col, parent, key) edges."""
+    from xdump_spark.catalog import Catalog
+
+    return Catalog(
+        {n: spark.createDataFrame(rows, ddl) for n, (rows, ddl) in tables.items()},
+        [ForeignKey(*fk) for fk in fks],
+    )
+
+
+def _hierarchy(spark, depth, tickets=20):
+    """The deep-hierarchy shape: a manager chain ``emp`` of ``depth``
+    levels (id i reports to i - 1) that also points at ``grp``, ``tick``
+    written by its members, and unreferenced ``com`` rows on tickets;
+    comment 1 hangs off a ticket of the deepest employee."""
+    return _cat(
+        spark,
+        {
+            "grp": ([(1,), (2,)], "id long"),
+            "emp": ([(i, i - 1 if i > 1 else None, 1 + i % 2) for i in range(1, depth + 1)],
+                    "id long, manager_id long, group_id long"),
+            "tick": ([(i, depth if i == 1 else 1 + i % depth) for i in range(1, tickets + 1)],
+                     "id long, author_id long"),
+            "com": ([(1, 1), (2, 2)], "id long, ticket_id long"),
+        },
+        [("emp", "manager_id", "emp", "id"), ("emp", "group_id", "grp", "id"),
+         ("tick", "author_id", "emp", "id"), ("com", "ticket_id", "tick", "id")],
+    )
+
+
+def _run_under_group(spark, group, fn):
+    """Run ``fn`` under a job group; return its result and the job ids
+    the scheduler handed out meanwhile (every job, whatever its group)."""
+    sc = spark.sparkContext
+    dag = sc._jsc.sc().dagScheduler()
+    first = dag.nextJobId()
+    sc.setJobGroup(group, f"{group} description")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, list(range(first, dag.nextJobId()))
+
+
+def _rows(out):
+    return {t: sorted(tuple(r) for r in df.collect()) for t, df in out.items()}
+
+
+class TestResidency:
+    """Mixed residency: with a bound of a few rows some tables saturate on
+    the driver and the rest run distributed rounds; each case must match
+    the all-distributed (bound 0) and the all-resident results row for
+    row, with the same set of reached tables."""
+
+    def _lockstep(self, monkeypatch, caplog, catalog, bound, full=(), partial=None):
+        import logging
+
+        from xdump_spark.planner import closure as C
+
+        def at(limit):
+            monkeypatch.setattr(C, "DRIVER_CLOSURE_LIMIT", limit)
+            return _rows(compute_closure(catalog, full, dict(partial or {})))
+
+        with caplog.at_level(logging.DEBUG, logger="xdump_spark"):
+            caplog.clear()
+            mixed = at(bound)
+            paths = {r.getMessage().split("path=")[1].split()[0]
+                     for r in caplog.records if "closure.residency" in r.getMessage()}
+        assert paths == {"resident", "distributed"}   # the case really mixes
+        assert mixed == at(0)
+        assert mixed == at(1_000_000)
+        return mixed
+
+    def test_edges_cross_both_ways(self, monkeypatch, caplog, spark):
+        # a (6 rows, oversized) ⇄ b (3 rows, resident): a1 → b10 → a2 → b20 → a5 → b30
+        cat = _cat(
+            spark,
+            {"a": ([(1, 10), (2, 20), (3, None), (4, 10), (5, 30), (6, 40)], "id long, b_id long"),
+             "b": ([(10, 2), (20, 5), (30, None)], "id long, a_id long")},
+            [("a", "b_id", "b", "id"), ("b", "a_id", "a", "id")],
+        )
+        out = self._lockstep(monkeypatch, caplog, cat, 3,
+                             partial={"a": cat.tables["a"].filter("id = 1")})
+        assert {r[0] for r in out["a"]} == {1, 2, 5}
+        assert {r[0] for r in out["b"]} == {10, 20, 30}
+
+    def test_self_fk_cycle_in_resident_table(self, monkeypatch, caplog, spark):
+        # string keys: e1 → e2 → e3 → e1
+        cat = _cat(
+            spark,
+            {"emp": ([("e1", "e2"), ("e2", "e3"), ("e3", "e1"), ("e4", None)],
+                     "id string, manager_id string"),
+             "tick": ([(i, [None, "e1", "e4", "e2", "e4", "e1"][i - 1]) for i in range(1, 7)],
+                      "id long, author_id string"),
+             "com": ([(1, 2), (2, 3)], "id long, ticket_id long")},
+            [("emp", "manager_id", "emp", "id"), ("tick", "author_id", "emp", "id"),
+             ("com", "ticket_id", "tick", "id")],
+        )
+        out = self._lockstep(monkeypatch, caplog, cat, 4,
+                             partial={"com": cat.tables["com"].filter("id = 1")})
+        assert {r[0] for r in out["emp"]} == {"e1", "e2", "e3"}
+
+    def test_deep_resident_chain_under_oversized_table(self, monkeypatch, caplog, spark):
+        cat = _hierarchy(spark, depth=10)
+        out = self._lockstep(monkeypatch, caplog, cat, 10,
+                             partial={"com": cat.tables["com"].filter("id = 1")})
+        assert {r[0] for r in out["emp"]} == set(range(1, 11))
+
+    def test_null_duplicate_and_dangling_values(self, monkeypatch, caplog, spark):
+        # nodes: key 10 twice (both rows' parents count); refs: null FKs,
+        # dangling 99; the only value refs sends to tags dangles (999),
+        # so tags is reached with no rows on every path.
+        cat = _cat(
+            spark,
+            {"nodes": ([(10, 20), (10, 30), (20, None), (30, 40), (40, None)],
+                       "nid long, parent long"),
+             "refs": ([(1, 10, None), (2, None, 999), (3, 99, None), (4, None, 1),
+                       (5, 10, 1), (6, 77, 2), (7, 40, 2)], "rid long, node long, tag long"),
+             "tags": ([(1,), (2,)], "id long"),
+             "src": ([(1, 1), (2, 2), (3, 3), (4, None)], "sid long, ref long")},
+            [("nodes", "parent", "nodes", "nid"), ("refs", "node", "nodes", "nid"),
+             ("refs", "tag", "tags", "id"), ("src", "ref", "refs", "rid")],
+        )
+        out = self._lockstep(monkeypatch, caplog, cat, 5, partial={"src": cat.tables["src"]})
+        assert {r[0] for r in out["nodes"]} == {10, 20, 30, 40}
+        assert {r[0] for r in out["refs"]} == {1, 2, 3}
+        assert out["tags"] == []
+
+    def test_oversized_seed_table_and_full_table(self, monkeypatch, caplog, spark,
+                                                 employees_catalog):
+        # bound 4: employees (5 rows, seeded) and the full tickets table
+        # are oversized, groups stays resident
+        self._lockstep(monkeypatch, caplog, employees_catalog, 4, full=["tickets"],
+                       partial={"employees": seed(employees_catalog, "employees", "id = 5")})
+        # a small full table feeding an oversized one, no seeds
+        cat = _cat(
+            spark,
+            {"f": ([(1, 2), (2, None)], "fid long, a_id long"),
+             "a": ([(i, i - 1 if i > 1 else None) for i in range(1, 7)], "id long, up long")},
+            [("f", "a_id", "a", "id"), ("a", "up", "a", "id")],
+        )
+        out = self._lockstep(monkeypatch, caplog, cat, 3, full=["f"])
+        assert {r[0] for r in out["a"]} == {1, 2}
+
+    def test_job_count_independent_of_resident_depth(self, monkeypatch, spark):
+        from xdump_spark.planner import closure as C
+
+        monkeypatch.setattr(C, "DRIVER_CLOSURE_LIMIT", 12)   # tick (20 rows) oversized
+        counts = []
+        for depth in (4, 12):
+            cat = _hierarchy(spark, depth)
+            out, jobs = _run_under_group(
+                spark, f"closure-depth-{depth}",
+                lambda: compute_closure(cat, (), {"com": cat.tables["com"].filter("id = 1")}),
+            )
+            assert ids(out["emp"]) == set(range(1, depth + 1))
+            tracker = spark.sparkContext.statusTracker()
+            assert sorted(tracker.getJobIdsForGroup(f"closure-depth-{depth}")) == jobs
+            counts.append(len(jobs))
+        assert counts[0] == counts[1] > 0
+
+    def test_jobs_keep_callers_description(self, monkeypatch, spark, employees_catalog):
+        # bound 4: employees (5 rows) runs distributed rounds while groups
+        # is resident, so a round overlaps an advance and a boundary collect
+        from xdump_spark.planner import closure as C
+
+        monkeypatch.setattr(C, "DRIVER_CLOSURE_LIMIT", 4)
+        _, jobs = _run_under_group(
+            spark, "closure-props",
+            lambda: compute_closure(
+                employees_catalog, (), {"tickets": seed(employees_catalog, "tickets", "id = 3")}
+            ),
+        )
+        store = spark.sparkContext._jsc.sc().statusStore()
+        descs = [store.job(j).description() for j in jobs]
+        assert jobs and all(
+            d.isDefined() and d.get() == "closure-props description" for d in descs
+        )
+
+    def test_decisions_logged(self, monkeypatch, caplog, spark, employees_catalog):
+        import logging
+
+        from xdump_spark.planner import closure as C
+
+        monkeypatch.setattr(C, "DRIVER_CLOSURE_LIMIT", 4)
+        with caplog.at_level(logging.DEBUG, logger="xdump_spark"):
+            compute_closure(
+                employees_catalog, (), {"tickets": seed(employees_catalog, "tickets", "id = 3")}
+            )
+        got = sorted(r.getMessage() for r in caplog.records if r.levelno == logging.DEBUG
+                     and r.getMessage().startswith("decision closure.residency"))
+        assert got == [
+            "decision closure.residency table=employees path=distributed bound=4 rows=5",
+            "decision closure.residency table=groups path=resident bound=4 rows=2",
+            "decision closure.residency table=tickets path=resident bound=4 rows=1",
+        ]

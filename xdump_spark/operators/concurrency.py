@@ -15,12 +15,23 @@ from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
 
+from pyspark.sql import SparkSession
+from pyspark.util import inheritable_thread_target
+
 
 def overlap(*thunks):
     """Run independent builder thunks on driver threads; return results
-    in thunk order. Exceptions propagate from the failing thunk."""
-    if len(thunks) == 1:
-        return [thunks[0]()]
+    in thunk order. Exceptions propagate from the failing thunk.
+
+    Each thunk runs under the caller's Spark local properties (job group,
+    job description, scheduler pool) and session tags, so the jobs it
+    starts stay attributable to — and cancellable with — the caller's."""
+    if len(thunks) <= 1:
+        return [t() for t in thunks]
+    session = SparkSession.getActiveSession()
+    if session is not None:
+        inherit = inheritable_thread_target(session)
+        thunks = tuple(inherit(t) for t in thunks)
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
         futures = [pool.submit(t) for t in thunks]
         return [f.result() for f in futures]

@@ -16,13 +16,27 @@ Semantics reproduced from the reference (child→parent reachability):
 
 Spark-first design (NOT a translation of the string-rewriting planner):
 semi-naive key-set propagation. Each referenced table accumulates a
-*key-set* DataFrame (values of its referenced column); worklist increments
-are anti-joined against the accumulated set, so cycles (including self-FKs
+*key-set* (values of its referenced column); worklist increments are
+anti-joined against the accumulated set, so cycles (including self-FKs
 and multi-edge self-FKs) terminate without special-casing, and multi-path
 reachability dedupes by construction. Each table is materialized ONCE at
 the end via a single semi-join base ⋉ key-set.
 
 Scale properties (the reason for this shape):
+* One residency rule per table. Every statically reachable table's
+  narrow projection (key + FK columns; a seed's too) is sized once, by
+  counts in one Spark job — nothing is collected before it is known to
+  fit. A table within ``DRIVER_CLOSURE_LIMIT`` rows is *resident*: its
+  projection is collected once as Arrow and its keys saturate in a
+  driver BFS over numpy columns (any depth, any self-FK cycle, no Spark
+  job per level). Only oversized tables run distributed rounds, so the
+  job count is O(depth × oversized tables), not O(depth × tables).
+* Keys cross the boundary once per round: values the driver BFS sends
+  to an oversized parent become that parent's increment frame; values an
+  oversized increment sends to a resident parent are matched against the
+  parent's keys (so the collect is bounded by the parent's size) and fed
+  back to the BFS. All tables resident = one sizing job plus one
+  collect wave; none resident = the plain round loop.
 * Shuffled data is only ever the small key-sets, never full rows; the big
   per-table semi-join happens once, with the key side broadcast when small
   (adaptive on the checkpoint-known count).
@@ -33,48 +47,42 @@ Scale properties (the reason for this shape):
 * An increment feeding ≥2 FK edges is checkpointed as a NARROW frame (just
   the FK columns) so the underlying table is scanned once per round, not
   once per edge — at scale duplicate scans are the dominant waste.
-* Each BFS round runs its per-parent jobs from a thread pool so the
-  scheduler overlaps them. (A fused single-job variant — all parents
-  union-tagged into one wide frame, one checkpoint per round — measured
-  ~2× SLOWER at sf0.1: AQE executes the fused query's shuffle stages in
-  serialized waves, while independent jobs overlap freely. Job *count*
-  is not the cost; duplicate scans and per-round shuffles are.)
+* Each round runs its per-parent jobs from driver threads (``overlap``,
+  which keeps the caller's job group and description) so the scheduler
+  overlaps them. (A fused single-job variant — all parents union-tagged
+  into one wide frame, one checkpoint per round — measured ~2× SLOWER at
+  sf0.1: AQE executes the fused query's shuffle stages in serialized
+  waves, while independent jobs overlap freely.)
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from xdump_spark.catalog import Catalog
+from xdump_spark.operators.concurrency import overlap
+from xdump_spark.timing import logger
 
 # Key-sets below this row count are broadcast into the semi-join; larger
 # ones go through a shuffled join (AQE may still pick SHJ/SMJ).
 BROADCAST_KEY_LIMIT = 5_000_000
 
-# A table whose outgoing FKs are ALL self-edges and whose narrow
-# (key + FK columns) projection has at most this many rows runs its
-# recursion as ONE driver-side BFS over the collected edge map instead
-# of O(depth) Spark rounds (each round = a checkpoint job + a count
-# job; a 10-level manager chain paid ~20 tiny jobs of pure scheduling
-# latency — r14 measurement). The bound keeps the driver safe the same
-# way the broadcast limit does: ~3 longs/row, so 1M rows is ~24 MB
-# collected (dict overhead included, well under typical driver heaps);
-# a fact-sized self-FK table stays on the distributed loop.
-DRIVER_SELF_CLOSURE_LIMIT = 1_000_000
-
-# Generalization of the same bound to the WHOLE closure (r15): when every
-# table the worklist could touch fits this narrow-projection row bound,
-# the FK subgraph is collected once (one bounded collect per table,
-# overlapped on driver threads) and the entire fixed point saturates as a
-# driver-side BFS — O(tables) small jobs instead of O(depth × tables)
-# checkpoint+count job pairs. Any oversized table keeps the distributed
-# loop for the whole closure. Aggregate driver memory is bounded by
-# (reached tables) × limit narrow rows; with the 10-table catalog that is
-# the same order as one broadcast relation.
-DRIVER_CLOSURE_LIMIT = DRIVER_SELF_CLOSURE_LIMIT
+# Residency bound, in narrow-projection (key + FK columns) rows, per
+# reachable table: a table within it is collected once and saturates on
+# the driver; a larger one keeps the distributed round loop (each round =
+# a checkpoint job + a count job per touched table). The driver holds a
+# resident table as a few numpy/Arrow columns, ~8 bytes per value, so 1M
+# rows is tens of MB — the same order as one broadcast relation.
+DRIVER_CLOSURE_LIMIT = 1_000_000
 
 
 def validate_tables(catalog: Catalog, full_tables, partial_tables) -> None:
@@ -168,6 +176,116 @@ class _Selection:
         return self.keys
 
 
+def _arrow(values, typ: pa.DataType | None) -> pa.Array:
+    """One contiguous Arrow array of ``values``, cast to ``typ`` if given."""
+    if isinstance(values, pa.ChunkedArray):
+        values = values.combine_chunks()
+    return values if typ is None or values.type == typ else values.cast(typ)
+
+
+def _row_counts(frames: list[DataFrame]) -> list[int]:
+    """Row counts of several frames in ONE Spark job and no shuffle: the
+    (column-pruned) frames are unioned under a tag and counted by an
+    ``Observation`` on a noop write."""
+    tagged = reduce(
+        DataFrame.unionAll, [df.select(F.lit(i).alias("_n")) for i, df in enumerate(frames)]
+    )
+    obs = Observation()
+    tagged.observe(
+        obs, *[F.count_if(F.col("_n") == i).alias(str(i)) for i in range(len(frames))]
+    ).write.format("noop").mode("overwrite").save()
+    return [obs.get[str(i)] for i in range(len(frames))]
+
+
+class _DriverBFS:
+    """Key-set saturation of the resident tables, on the driver.
+
+    A resident table with outgoing edges is held as columns, never as
+    per-row objects: its distinct key values (``keys``), a CSR index from
+    key code to rows (``order``/``bounds``; a duplicated key keeps every
+    row), and per edge either the parent's key codes (parent held here
+    too) or the raw FK values. ``seen`` marks selected keys and
+    ``frontier`` the selected ones not yet expanded; a seed's keys are
+    seen but never expanded (their FK values come from the seed rows).
+    Values for any other table — a resident leaf or an oversized parent —
+    pile up in ``box``. ``touched`` records tables that received a
+    non-null value, dangling ones included, as the round loop does."""
+
+    def __init__(self, targets: dict[str, list[tuple[str, str]]],
+                 key_type: dict[str, pa.DataType]):
+        self.targets, self.key_type = targets, key_type
+        self.keys, self.order, self.bounds, self.seen, self.edges = {}, {}, {}, {}, {}
+        self.frontier: dict[str, list[np.ndarray]] = {}
+        self.box: dict[str, list[pa.Array]] = {}
+        self.touched: set[str] = set()
+
+    def hold(self, tables: dict[str, pa.Table]) -> None:
+        """Index each table's collected (key, FK columns...) projection."""
+        for t, tbl in tables.items():
+            enc = tbl.column(0).combine_chunks().dictionary_encode()
+            codes = enc.indices.fill_null(-1).to_numpy()
+            self.keys[t] = enc.dictionary
+            self.order[t] = np.argsort(codes, kind="stable")
+            self.bounds[t] = np.searchsorted(
+                codes[self.order[t]], np.arange(len(enc.dictionary) + 1)
+            )
+            self.seen[t] = np.zeros(len(enc.dictionary), bool)
+        for t, tbl in tables.items():
+            self.edges[t] = [
+                self.codes(p, col) if p in self.keys else _arrow(col, self.key_type.get(p))
+                for (_c, p), col in zip(self.targets[t], tbl.columns[1:])
+            ]
+
+    def codes(self, p: str, values) -> np.ndarray:
+        """Key codes of ``values`` in held table ``p``: -1 for null, -2
+        for a value no row of ``p`` has (dangling)."""
+        values = _arrow(values, self.keys[p].type)
+        idx = pc.index_in(values, value_set=self.keys[p]).fill_null(-2).to_numpy()
+        return np.where(values.is_valid().to_numpy(zero_copy_only=False), idx, -1)
+
+    def mark(self, p: str, codes: np.ndarray, expand: bool = True) -> None:
+        if (codes != -1).any():
+            self.touched.add(p)
+        codes = np.unique(codes[codes >= 0])
+        new = codes[~self.seen[p][codes]]
+        self.seen[p][new] = True
+        if expand and len(new):
+            self.frontier.setdefault(p, []).append(new)
+
+    def send(self, p: str, values, expand: bool = True) -> None:
+        """FK values (or seed keys, ``expand=False``) arriving at ``p``."""
+        if p in self.keys:
+            self.mark(p, self.codes(p, values), expand)
+        else:
+            self.box.setdefault(p, []).append(_arrow(values, self.key_type.get(p)))
+
+    def saturate(self) -> None:
+        """Expand the frontier to a fixed point over the held tables."""
+        while self.frontier:
+            t, parts = self.frontier.popitem()
+            codes = np.concatenate(parts)
+            lo = self.bounds[t][codes]
+            n = self.bounds[t][codes + 1] - lo
+            rows = self.order[t][np.repeat(lo - np.cumsum(n) + n, n) + np.arange(n.sum())]
+            for (_c, p), vals in zip(self.targets[t], self.edges[t]):
+                if isinstance(vals, np.ndarray):
+                    self.mark(p, vals[rows])
+                else:
+                    self.box.setdefault(p, []).append(vals.take(rows))
+
+    def take(self, p: str) -> pa.Array:
+        """Distinct non-null values boxed for ``p`` so far (and unbox them)."""
+        parts = self.box.pop(p, None) or [pa.array([], self.key_type[p])]
+        return pc.unique(pa.concat_arrays(parts)).drop_null()
+
+    def selected(self, t: str) -> pa.Array | None:
+        """Final key set of resident table ``t``; None if never reached."""
+        if t in self.keys:
+            return self.keys[t].filter(pa.array(self.seen[t])) if t in self.touched else None
+        vals = self.take(t)
+        return vals if len(vals) or t in self.touched else None
+
+
 def compute_closure(
     catalog: Catalog,
     full_tables: list[str] | tuple[str, ...] = (),
@@ -242,35 +360,6 @@ def compute_closure(
         return out
 
     narrow_base: dict[str, DataFrame] = {}
-    # parent -> (key -> tuple of referenced keys) | None when the table
-    # is over DRIVER_SELF_CLOSURE_LIMIT (falls back to the round loop)
-    self_edges_cache: dict[str, dict | None] = {}
-
-    def driver_self_edges(parent: str, key_col: str) -> dict | None:
-        """Collected edge map of an ALL-self-FK table (see
-        DRIVER_SELF_CLOSURE_LIMIT): key value -> the row's non-null FK
-        values. Built once from the already-materialized narrow
-        projection; None (permanently) when the table is too big to
-        collect, in which case the caller stays on the round loop."""
-        if parent in self_edges_cache:
-            return self_edges_cache[parent]
-        base, _ = propagation_base(parent, key_col)
-        cols = propagation_columns(parent)
-        narrow = base.select(key_col, *cols)
-        if narrow.limit(DRIVER_SELF_CLOSURE_LIMIT + 1).count() > DRIVER_SELF_CLOSURE_LIMIT:
-            self_edges_cache[parent] = None
-            return None
-        edges: dict = {}
-        for row in narrow.collect():
-            dsts = [v for v in row[1:] if v is not None]
-            if dsts:
-                # Accumulate per key: a duplicated key value must keep
-                # EVERY row's edges, exactly as the distributed semi-join
-                # pulls every matching row (last-write-wins would silently
-                # under-export).
-                edges.setdefault(row[0], []).extend(dsts)
-        self_edges_cache[parent] = edges
-        return edges
 
     def propagation_base(parent: str, key_col: str) -> tuple[DataFrame, bool]:
         """Base frame increment rows are pulled from. A self-FK table is
@@ -289,196 +378,8 @@ def compute_closure(
             return narrow_base[parent], True
         return catalog.tables[parent], False
 
-    def driver_closure_fastpath() -> bool:
-        """Whole-closure driver-side fixed point (r15, generalizing the
-        r14 all-self-FK BFS to mixed-edge graphs): when EVERY table the
-        worklist could statically touch fits DRIVER_CLOSURE_LIMIT narrow
-        rows, collect each table's (key + FK columns) projection once —
-        one bounded collect per table, overlapped on driver threads — and
-        saturate the entire closure as a dict-speed BFS. The distributed
-        loop pays a checkpoint job + a count job per TOUCHED TABLE per
-        ROUND (the merge scenario = ~4 rounds × up to 6 tables of pure
-        scheduling latency, 8↔32-core ratio 1.02 in the r14 driver bench
-        — job latency, not compute); the fast path pays O(tables)
-        bounded collects in one overlapped wave. Key-set semantics are
-        identical: seed keys are marked seen without re-pulling base
-        rows, null FK values never propagate, edges into full tables are
-        skipped, and self-edges saturate naturally. Returns False — and
-        the caller keeps the distributed loop — when any reachable
-        table's narrow projection exceeds the bound (the bounded
-        ``limit(L+1)`` collect reads at most L+1 narrow rows even on a
-        100 TB table) or a referenced-key resolution fails."""
-        # Statically reachable tables (superset of what the worklist can
-        # dynamically touch); edges into full tables are skipped.
-        reach: set[str] = set(seeds) | set(full)
-        stack = list(reach)
-        while stack:
-            for fk in catalog.outgoing(stack.pop()):
-                p = fk.foreign_table
-                if p not in full and p not in reach:
-                    reach.add(p)
-                    stack.append(p)
-        try:
-            key_of = {
-                t: (None if t in full else catalog.referenced_key(t))
-                for t in reach
-            }
-        except ValueError:
-            # Multi-column reference target: only an error if dynamically
-            # touched — let the distributed loop decide.
-            return False
-
-        # Propagation targets per table: (child column, parent) per FK
-        # edge into a non-full parent, in a fixed order shared by the
-        # collected row tuples.
-        targets: dict[str, list[tuple[str, str]]] = {}
-        for t in reach:
-            tgts = [
-                (fk.column, fk.foreign_table)
-                for fk in catalog.outgoing(t)
-                if fk.foreign_table not in full
-            ]
-            for col, parent in tgts:
-                fkc = next(
-                    fk.foreign_column
-                    for fk in catalog.outgoing(t)
-                    if fk.column == col and fk.foreign_table == parent
-                )
-                if key_of[parent] != fkc:
-                    raise ValueError(
-                        f"FK {t}.{col} disagrees with key column "
-                        f"{key_of[parent]!r} of {parent!r}"
-                    )
-            if tgts:
-                targets[t] = tgts
-
-        # Frames whose rows must be collected: every full table's
-        # propagation projection (all rows propagate once), every
-        # referenced table's key+FK projection (rows selected by key
-        # later), and every seed's key+FK projection (the seed SQL is
-        # evaluated exactly once, as the loop's snap checkpoint does).
-        grabs: list[tuple[str, str, DataFrame, list[tuple[str, str]]]] = []
-        for t in sorted(reach):
-            tgts = targets.get(t, [])
-            if t in full:
-                if tgts:
-                    grabs.append(
-                        ("full", t, catalog.tables[t].select(
-                            *[F.col(c) for c, _ in tgts]), tgts)
-                    )
-                continue
-            if key_of[t] is not None and tgts:
-                grabs.append(
-                    ("table", t, catalog.tables[t].select(
-                        key_of[t], *[F.col(c) for c, _ in tgts]), tgts)
-                )
-            if t in seeds and (key_of[t] is not None or tgts):
-                cols = ([key_of[t]] if key_of[t] is not None else []) + [
-                    F.col(c) for c, _ in tgts
-                ]
-                grabs.append(("seed", t, seeds[t].select(*cols), tgts))
-
-        from xdump_spark.operators.concurrency import overlap
-
-        limit = DRIVER_CLOSURE_LIMIT
-
-        def grab(df: DataFrame):
-            # Arrow transfer, not collect(): a py4j Row collect of a
-            # 150k-row narrow costs ~1 s of driver-side Row construction
-            # alone (guide §6 Arrow-for-driver-transfers); the columnar
-            # path is ~20× cheaper. Column-major lists out.
-            tbl = df.limit(limit + 1).toArrow()
-            if tbl.num_rows > limit:
-                return None
-            return [col.to_pylist() for col in tbl.columns]
-
-        collected = (
-            overlap(*[lambda df=df: grab(df) for _, _, df, _ in grabs])
-            if grabs
-            else []
-        )
-        if any(cols is None for cols in collected):
-            return False
-
-        # BFS state: selected key values per table. Referenced seed
-        # tables get an entry even when empty so their out-membership
-        # matches the loop (which adds the seed key-set unconditionally).
-        selected: dict[str, set] = {}
-        table_rows: dict[str, dict] = {}
-        pend: list[tuple[str, object]] = []
-
-        def contribute(parent: str, value) -> None:
-            if value is None:
-                return
-            vals = selected.setdefault(parent, set())
-            if value not in vals:
-                vals.add(value)
-                pend.append((parent, value))
-
-        for (kind, t, _df, tgts), cols in zip(grabs, collected):
-            if kind == "table":
-                by_key: dict = {}
-                for key, vals in zip(cols[0], zip(*cols[1:])):
-                    by_key.setdefault(key, []).append(vals)
-                table_rows[t] = by_key
-            elif kind == "seed" and key_of[t] is not None:
-                # Seed keys are seen-but-not-expanded: the loop never
-                # re-pulls base rows for seed keys either (they enter the
-                # accumulated set before any anti-join).
-                selected.setdefault(t, set()).update(
-                    v for v in cols[0] if v is not None
-                )
-
-        for (kind, t, _df, tgts), cols in zip(grabs, collected):
-            if kind == "table":
-                continue
-            off = 1 if kind == "seed" and key_of[t] is not None else 0
-            for i, (_c, parent) in enumerate(tgts):
-                for v in cols[off + i]:
-                    contribute(parent, v)
-
-        while pend:
-            t, v = pend.pop()
-            for vt in table_rows.get(t, {}).get(v, ()):
-                for i, (_c, parent) in enumerate(targets[t]):
-                    contribute(parent, vt[i])
-
-        from pyspark.sql import types as T
-
-        for t in sorted(reach - full):
-            s = sel(t)
-            if s.key_col is None:
-                continue
-            vals = selected.get(t)
-            if vals is None:
-                continue
-            schema = T.StructType([catalog.tables[t].schema[s.key_col]])
-            session = catalog.tables[t].sparkSession
-            if len(vals) > 100_000:
-                # Arrow path for big key sets (same reasoning as grab())
-                import pandas as pd
-
-                keys = session.createDataFrame(
-                    pd.DataFrame({s.key_col: sorted(vals)}), schema
-                )
-            else:
-                keys = session.createDataFrame(
-                    [(v,) for v in sorted(vals)], schema
-                )
-            s.add_keys(keys, len(vals))
-        return True
-
-    # Level-synchronous BFS over the FK graph: each round gathers ALL key
-    # contributions per parent table (one union+distinct+anti-join+
-    # checkpoint per touched table per round), so the number of Spark jobs
-    # is O(diameter × touched_tables), not O(edges × increments). Column
-    # pruning means only the FK columns of an increment ever hit the scan.
-    pending: dict[str, list[DataFrame]] = {}
-
     for t in full:
-        # Full tables propagate (F5). Kept lazy (no narrow checkpoint):
-        # materializing a full table's FK columns could be huge; repeated
-        # pruned parquet scans are the safer trade.
+        # Full tables propagate (F5): every row's FK values, once.
         sel(t, needs_key=False).is_full = True
     for t, seed_df in seeds.items():
         s = sel(t)
@@ -499,135 +400,196 @@ def compute_closure(
             )
         s.seed_dfs.append(seed_df)
 
-    if not driver_closure_fastpath():
-        for t in full:
-            pending.setdefault(t, []).append(catalog.tables[t])
-        for t, seed_df in seeds.items():
-            s = state[t]
-            prop_cols = propagation_columns(t)
-            if s.key_col is not None or prop_cols:
-                # Seeds are arbitrary user SQL (sorts, joins, limits, ...)
-                # — evaluate each ONCE: checkpoint the narrow projection
-                # (key + FK columns) and derive both the initial key-set
-                # and the first propagation increment from the
-                # materialized frame.
-                keep = sorted(set(prop_cols) | ({s.key_col} if s.key_col else set()))
-                snap = seed_df.select(*keep).localCheckpoint(eager=True)
-                if s.key_col is not None:
-                    keys = snap.select(s.key_col).distinct().localCheckpoint(eager=True)
-                    s.add_keys(keys, keys.count())
-                if prop_cols:
-                    pending.setdefault(t, []).append(snap.select(*prop_cols))
+    # -- Residency: size each statically reachable table once. ----------
+    reach: set[str] = set(seeds) | full
+    stack = list(reach)
+    while stack:
+        for fk in catalog.outgoing(stack.pop()):
+            if fk.foreign_table not in full and fk.foreign_table not in reach:
+                reach.add(fk.foreign_table)
+                stack.append(fk.foreign_table)
+    key_of: dict[str, str | None] = {}
+    for t in reach - full:
+        try:
+            key_of[t] = catalog.referenced_key(t)
+        except ValueError:
+            pass   # multi-column target: the round loop raises if it is touched
+    # (child column, parent) per FK edge into a non-full parent.
+    targets: dict[str, list[tuple[str, str]]] = {}
+    for t in reach:
+        for fk in catalog.outgoing(t):
+            p = fk.foreign_table
+            if p in full:
+                continue   # parent already complete (xdump/postgresql.py:148-156)
+            if p in key_of and key_of[p] != fk.foreign_column:
+                raise ValueError(f"FK {fk} disagrees with key column {key_of[p]!r} of {p!r}")
+            targets.setdefault(t, []).append((fk.column, p))
+    key_type = {
+        t: to_arrow_type(catalog.tables[t].schema[k].dataType) for t, k in key_of.items() if k
+    }
 
+    def narrow(t: str, df: DataFrame) -> DataFrame:
+        key = [key_of[t]] if key_of.get(t) else []
+        return df.select(*key, *[F.col(c) for c, _ in targets.get(t, [])])
+
+    # (kind, table, narrow frame): a full table with edges out, a
+    # referenced table, and a seed (its SQL is sized and read like a table).
+    sized: list[tuple[str, str, DataFrame]] = []
+    for t in sorted(reach):
+        if key_of.get(t) or (t in full and t in targets):
+            sized.append(("table", t, narrow(t, catalog.tables[t])))
+        if t in seeds and (key_of.get(t) or t in targets):
+            sized.append(("seed", t, narrow(t, seeds[t])))
+    sizes: dict[str, int] = {}
+    if sized:
+        for (_k, t, _df), n in zip(sized, _row_counts([df for _, _, df in sized])):
+            sizes[t] = max(n, sizes.get(t, 0))
+    limit = DRIVER_CLOSURE_LIMIT
+    resident = {t for t, n in sizes.items() if n <= limit}
+    for t in sorted(sizes):
+        logger.debug(
+            "decision closure.residency table=%s path=%s bound=%d rows=%d",
+            t, "resident" if t in resident else "distributed", limit, sizes[t],
+        )
+
+    # Resident tables: one overlapped wave of Arrow collects, then the
+    # driver BFS. Seed keys are marked before any value moves, so they are
+    # seen but never re-expanded (as in the round loop, where they enter
+    # the accumulated set before the first anti-join).
+    grabs = [(k, t, df) for k, t, df in sized
+             if t in resident and (k == "seed" or t in targets)]
+    got = overlap(*[lambda df=df: df.toArrow() for _, _, df in grabs])
+    bfs = _DriverBFS(targets, key_type)
+    bfs.hold({t: tbl for (k, t, _), tbl in zip(grabs, got) if k == "table" and t not in full})
+    for (k, t, _), tbl in zip(grabs, got):
+        if k == "seed" and key_of.get(t):
+            bfs.touched.add(t)
+            bfs.send(t, tbl.column(0), expand=False)
+    for (k, t, _), tbl in zip(grabs, got):
+        if k == "seed" or t in full:
+            for (_c, p), col in zip(targets.get(t, []), tbl.columns[1 if key_of.get(t) else 0:]):
+                bfs.send(p, col)
+
+    # Oversized tables: the distributed semi-naive loop.
+    pending: dict[str, list[DataFrame]] = {}
+    for t in full & (set(sizes) - resident):
+        # Kept lazy (no narrow checkpoint): materializing a full table's FK
+        # columns could be huge; repeated pruned parquet scans are the
+        # safer trade.
+        pending[t] = [catalog.tables[t]]
+    for t, seed_df in seeds.items():
+        if t in resident or t not in sizes:
+            continue
+        s = state[t]
+        prop_cols = propagation_columns(t)
+        # Seeds are arbitrary user SQL (sorts, joins, limits, ...) —
+        # evaluate each ONCE: checkpoint the narrow projection (key + FK
+        # columns) and derive both the initial key-set and the first
+        # propagation increment from the materialized frame.
+        keep = sorted(set(prop_cols) | ({s.key_col} if s.key_col else set()))
+        snap = seed_df.select(*keep).localCheckpoint(eager=True)
+        if s.key_col is not None:
+            keys = snap.select(s.key_col).distinct().localCheckpoint(eager=True)
+            s.add_keys(keys, keys.count())
+        if prop_cols:
+            pending.setdefault(t, []).append(snap.select(*prop_cols))
+
+    def key_frame(t: str, vals: pa.Array) -> DataFrame:
+        schema = T.StructType([catalog.tables[t].schema[sel(t).key_col]])
+        return catalog.tables[t].sparkSession.createDataFrame(
+            pa.table({schema[0].name: vals}), schema
+        )
+
+    def advance(parent: str, parts: list[DataFrame]) -> tuple[str, DataFrame | None]:
+        """One oversized parent's round step: dedup + anti-join +
+        checkpoint the new keys, fold them into the accumulated set, and
+        build the (narrow) increment for the next round. Runs on a worker
+        thread; only per-parent state is touched."""
+        p = state[parent]
+        contrib = reduce(DataFrame.union, parts).distinct()   # multi-path dedup in one shot
+        new = p.subtract_seen(contrib).localCheckpoint(eager=True)
+        n_new = new.count()
+        if n_new == 0:
+            return parent, None
+        p.add_keys(new, n_new)
+        if not propagation_columns(parent):
+            return parent, None   # nothing references out of this table
+        inc = F.broadcast(new) if n_new <= BROADCAST_KEY_LIMIT else new
+        base, in_memory = propagation_base(parent, p.key_col)
+        rows = base.join(inc, on=p.key_col, how="left_semi")
+        if in_memory:
+            # Re-deriving this tiny in-memory join per edge is cheaper
+            # than another checkpoint job.
+            return parent, rows.select(*propagation_columns(parent))
+        return parent, narrow_increment(parent, rows)
+
+    def cross(parent: str, parts: list[DataFrame]) -> tuple[str, pa.ChunkedArray]:
+        """FK values oversized increments send to a resident parent, onto
+        the driver. Joined against the parent's keys (broadcast — the
+        parent is resident), every dangling value turns null, so the
+        collect holds at most the parent's distinct keys plus one null;
+        that null still marks the parent reached, as the round loop
+        would."""
+        key = state[parent].key_col
+        hit = catalog.tables[parent].select(key, F.lit(True).alias("_hit"))
+        vals = (
+            reduce(DataFrame.union, parts)
+            .join(F.broadcast(hit), on=key, how="left")
+            .select(F.when(F.col("_hit"), F.col(key)).alias(key))
+            .distinct()
+            .toArrow()
+            .column(0)
+        )
+        return parent, vals
+
+    # Level-synchronous rounds over the oversized tables: each gathers ALL
+    # key contributions per parent (one union+distinct+anti-join+checkpoint
+    # per touched table per round), so the job count is O(diameter ×
+    # oversized touched tables); the resident side saturates between
+    # rounds on the main thread.
     rounds = 0
-    while pending:
-        rounds += 1
-        if rounds > max_steps:
-            raise RuntimeError(f"closure did not converge within {max_steps} rounds")
-        # gather contributions per parent across every pending increment
+    while True:
+        bfs.saturate()
         contribs: dict[str, list[DataFrame]] = {}
+        inbound: dict[str, list[DataFrame]] = {}
+        for p in sorted(set(bfs.box) - resident):
+            vals = bfs.take(p)
+            if len(vals):
+                contribs[p] = [key_frame(p, vals)]
         for table, increments in pending.items():
             for fk in catalog.outgoing(table):
                 parent = fk.foreign_table
                 if parent in full:
-                    # Edge into a full table: parent is already complete
-                    # (reference: xdump/postgresql.py:148-156).
                     continue
                 key_col = sel(parent).key_col
-                if key_col != fk.foreign_column:
-                    raise ValueError(
-                        f"FK {fk} disagrees with key column {key_col!r} of {parent!r}"
-                    )
                 for inc in increments:
-                    contribs.setdefault(parent, []).append(
+                    (inbound if parent in resident else contribs).setdefault(parent, []).append(
                         inc.select(F.col(fk.column).alias(key_col)).where(
                             F.col(key_col).isNotNull()
                         )
                     )
+        if not contribs and not inbound:
+            break
+        rounds += 1
+        if rounds > max_steps:
+            raise RuntimeError(f"closure did not converge within {max_steps} rounds")
+        results = overlap(
+            *[lambda kv=kv: advance(*kv) for kv in contribs.items()],
+            *[lambda kv=kv: cross(*kv) for kv in inbound.items()],
+        )
         pending = {}
+        for parent, inc in results[:len(contribs)]:
+            if inc is not None:
+                pending.setdefault(parent, []).append(inc)
+        for parent, vals in results[len(contribs):]:
+            if len(vals):
+                bfs.touched.add(parent)
+            bfs.send(parent, vals)
 
-        def advance(parent: str, parts: list[DataFrame]) -> tuple[str, DataFrame | None]:
-            """One parent's full round step: dedup + anti-join + checkpoint
-            the new keys, fold them into the accumulated set, and build the
-            (narrow) increment for the next round. Runs on a worker thread;
-            only per-parent state is touched."""
-            p = state[parent]
-            contrib = parts[0]
-            for extra in parts[1:]:
-                contrib = contrib.union(extra)
-            fks = catalog.outgoing(parent)
-            if fks and all(
-                fk.is_recursive and fk.foreign_table == parent for fk in fks
-            ):
-                edges = driver_self_edges(parent, p.key_col)
-                if edges is not None:
-                    # ONE driver BFS saturates the whole self-recursion:
-                    # the round loop pays a checkpoint+count job pair per
-                    # chain LEVEL (a 10-deep manager chain = ~20 tiny
-                    # jobs of pure scheduling latency), while the edge
-                    # map — already bounded by DRIVER_SELF_CLOSURE_LIMIT
-                    # — answers every level at dict speed. All edges are
-                    # self-edges, so nothing propagates to other tables
-                    # and the table's pending work ends here.
-                    total = {r[0] for r in contrib.distinct().collect()}
-                    frontier = set(total)
-                    while frontier:
-                        nxt = set()
-                        for kv in frontier:
-                            for dst in edges.get(kv, ()):
-                                if dst not in total:
-                                    total.add(dst)
-                                    nxt.add(dst)
-                        frontier = nxt
-                    if not total:
-                        return parent, None
-                    from pyspark.sql import types as T
-
-                    schema = T.StructType(
-                        [catalog.tables[parent].schema[p.key_col]]
-                    )
-                    reach = catalog.tables[parent].sparkSession.createDataFrame(
-                        [(v,) for v in sorted(total)], schema
-                    )
-                    new = p.subtract_seen(reach).localCheckpoint(eager=True)
-                    n_new = new.count()
-                    if n_new:
-                        p.add_keys(new, n_new)
-                    return parent, None
-            contrib = contrib.distinct()   # multi-path dedup in one shot
-            contrib = p.subtract_seen(contrib)
-            new = contrib.localCheckpoint(eager=True)
-            n_new = new.count()
-            if n_new == 0:
-                return parent, None
-            p.add_keys(new, n_new)
-            if not propagation_columns(parent):
-                return parent, None   # nothing references out of this table
-            inc = F.broadcast(new) if n_new <= BROADCAST_KEY_LIMIT else new
-            base, in_memory = propagation_base(parent, p.key_col)
-            rows = base.join(inc, on=p.key_col, how="left_semi")
-            if in_memory:
-                # Re-deriving this tiny in-memory join per edge is cheaper
-                # than another checkpoint job.
-                return parent, rows.select(*propagation_columns(parent))
-            return parent, narrow_increment(parent, rows)
-
-        # Each parent's jobs are independent; run the round's work from a
-        # thread pool so the scheduler overlaps them — wall time per round
-        # becomes max over touched tables, not sum. Each thread mutates
-        # only its own parent's state.
-        if len(contribs) <= 1:
-            results = [advance(t, ps) for t, ps in contribs.items()]
-        else:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=min(8, len(contribs))) as pool:
-                results = list(
-                    pool.map(lambda kv: advance(kv[0], kv[1]), contribs.items())
-                )
-        for parent, rows in results:
-            if rows is not None:
-                pending.setdefault(parent, []).append(rows)
+    for t in sorted(t for t in resident if key_of.get(t)):
+        vals = bfs.selected(t)
+        if vals is not None:
+            sel(t).add_keys(key_frame(t, vals), len(vals))
 
     # Materialize: one semi-join per reached table.
     out: dict[str, DataFrame] = {}
@@ -771,7 +733,3 @@ def recursive_ancestors_doubling(
         keys = F.broadcast(keys)
     return base.join(keys, on=key, how="left_semi")
 
-
-def closure_summary(result: dict[str, DataFrame]) -> list[tuple[str, int]]:
-    """(table, selected-row-count) pairs, sorted by table name."""
-    return sorted((name, df.count()) for name, df in result.items())
