@@ -82,6 +82,28 @@ def ids(df, col="id"):
     return {r[col] for r in df.select(col).collect()}
 
 
+def with_new_rows(spark, catalog) -> Catalog:
+    """The employees fixture after growth: one new group (id 3), two new
+    employees (ids 6,7 — 7 managed by OLD employee 3), one new ticket
+    (id 6 by a NEW employee)."""
+    new_groups = spark.createDataFrame([(3, "Guest")], catalog.tables["groups"].schema)
+    new_emps = spark.createDataFrame(
+        [(6, "New", "Hire", 3, None, 3), (7, "Also", "New", 3, None, 1)],
+        catalog.tables["employees"].schema,
+    )
+    new_tickets = spark.createDataFrame(
+        [(6, 6, "Sub 6", "Message 6")], catalog.tables["tickets"].schema
+    )
+    grown = catalog.with_table("groups", catalog.tables["groups"].unionByName(new_groups))
+    grown = grown.with_table(
+        "employees", catalog.tables["employees"].unionByName(new_emps)
+    )
+    grown = grown.with_table(
+        "tickets", catalog.tables["tickets"].unionByName(new_tickets)
+    )
+    return grown
+
+
 # --------------------------------------------------------------------------
 # slow-test profile (r15, VERDICT #1): the full suite outgrew the driver's
 # verify window (53 min; the gate read as failed on truncation, not on any

@@ -16,12 +16,22 @@ from xdump_spark.archive import (
 from xdump_spark.engine import SparkDumpEngine, toposort_tables
 from xdump_spark.catalog import ForeignKey
 
-from .conftest import ids
+from .conftest import ids, with_new_rows
 
 
 @pytest.fixture()
 def engine(spark, employees_catalog):
     return SparkDumpEngine(spark, employees_catalog)
+
+
+def _round_trips(tmp_path, spark, catalog, **selection):
+    """(packaging, LoadedDump) for a zip and a directory dump of one
+    selection, each loaded back through ``load``."""
+    eng = SparkDumpEngine(spark, catalog)
+    zip_path, dir_path = str(tmp_path / "rt.zip"), str(tmp_path / "rt_dir")
+    eng.dump(zip_path, **selection)
+    eng.dump_distributed(dir_path, **selection)
+    return [("zip", eng.load(zip_path)), ("dir", eng.load(dir_path))]
 
 
 def test_dump_archive_members(tmp_path, engine, employees_catalog):
@@ -156,24 +166,25 @@ def test_cli_parse_partial():
 def test_distributed_dump_load_roundtrip(tmp_path, spark, engine, employees_catalog):
     out_dir = str(tmp_path / "dist")
     seed = employees_catalog.tables["employees"].filter("id = 2")
-    tables = engine.dump_distributed(
+    counts = engine.dump_distributed(
         out_dir, full_tables=["groups"], partial_tables={"employees": seed}
     )
-    assert set(tables) == {"employees", "groups"}
-    loaded = engine.load_distributed(out_dir)
+    assert counts == {"employees": 2, "groups": 2}
+    loaded = engine.load(out_dir)
     # manager chain 2→1, groups full; schema round-trips typed
     emp = loaded.frames["employees"]
     assert {r.id for r in emp.collect()} == {1, 2}
     assert dict(emp.dtypes)["id"] == "int"
     assert loaded.frames["groups"].count() == 2
     assert loaded.load_order().index("groups") < loaded.load_order().index("employees")
+    assert loaded.sequences == {"employees": 2, "groups": 2}
 
 
 def test_distributed_csv_roundtrip(tmp_path, spark, engine, employees_catalog):
     out_dir = str(tmp_path / "dist_csv")
     seed = employees_catalog.tables["employees"].filter("id = 1")
     engine.dump_distributed(out_dir, partial_tables={"employees": seed}, fmt="csv")
-    loaded = engine.load_distributed(out_dir)
+    loaded = engine.load_distributed(out_dir)   # the former name still loads
     emp = loaded.frames["employees"]
     rows = {r.id: r for r in emp.collect()}
     assert set(rows) == {1}
@@ -211,13 +222,13 @@ def test_roundtrip_decimal_and_binary(tmp_path, spark):
     assert loaded.frames["items"].schema == st
 
 
-def test_sequence_state_skips_non_numeric_keys(spark):
+def test_sequence_state_skips_non_numeric_keys(tmp_path, spark):
     """A string-keyed parent must not crash the dump's sequence capture —
-    there is no serial counter to restore for uuid/code keys."""
+    there is no serial counter to restore for uuid/code keys. Zip and
+    directory dumps alike."""
     from pyspark.sql import types as T
 
     from xdump_spark.catalog import Catalog
-    from xdump_spark.engine import sequence_state
 
     parent = spark.createDataFrame(
         [("ZX-991",), ("AA-002",)],
@@ -236,8 +247,9 @@ def test_sequence_state_skips_non_numeric_keys(spark):
         {"parent": parent, "child": child},
         [ForeignKey("child", "parent_code", "parent", "code", "fk")],
     )
-    seqs = sequence_state({"parent": parent, "child": child}, cat)
-    assert "parent" not in seqs  # skipped, not crashed
+    for fmt, loaded in _round_trips(tmp_path, spark, cat, full_tables=["child"]):
+        assert ids(loaded.frames["parent"], "code") == {"ZX-991"}, fmt
+        assert loaded.sequences == {}, fmt  # skipped, not crashed
 
 
 def test_csv_header_escaping_roundtrip():
@@ -272,15 +284,15 @@ def test_parquet_db_truncate_file_form(tmp_path, spark):
     assert db.tables() == []
 
 
-def test_sequence_state_accepts_decimal_scale0_keys(spark):
+def test_sequence_state_accepts_decimal_scale0_keys(tmp_path, spark):
     """JDBC sources surface serial keys as DecimalType(p, 0) — those carry
-    a restorable counter and must be captured."""
+    a restorable counter and must be captured, by zip and directory dumps
+    alike."""
     from decimal import Decimal
 
     from pyspark.sql import types as T
 
     from xdump_spark.catalog import Catalog
-    from xdump_spark.engine import sequence_state
 
     parent = spark.createDataFrame(
         [(Decimal("7"),), (Decimal("42"),)],
@@ -299,18 +311,20 @@ def test_sequence_state_accepts_decimal_scale0_keys(spark):
         {"parent": parent, "child": child},
         [ForeignKey("child", "pid", "parent", "id", "fk")],
     )
-    assert sequence_state({"parent": parent}, cat) == {"parent": 42}
+    for fmt, loaded in _round_trips(tmp_path, spark, cat, full_tables=["parent"]):
+        assert loaded.sequences == {"parent": 42}, fmt
 
 
 def test_sequence_state_includes_leaf_tables(tmp_path, spark, engine):
     """The reference dumps ALL sequences (xdump/postgresql.py:136-146);
     a leaf table's serial counter (tickets — nothing references it) must
     survive the round trip via the catalog's explicit primary keys, or
-    post-load inserts would restart numbering and collide."""
-    out = str(tmp_path / "leaf.zip")
-    engine.dump(out, full_tables=["groups", "tickets"])
-    loaded = SparkDumpEngine(spark, engine.catalog).load(out)
-    assert loaded.sequences == {"employees": 3, "groups": 2, "tickets": 5}
+    post-load inserts would restart numbering and collide. Zip and
+    directory dumps alike."""
+    for fmt, loaded in _round_trips(
+        tmp_path, spark, engine.catalog, full_tables=["groups", "tickets"]
+    ):
+        assert loaded.sequences == {"employees": 3, "groups": 2, "tickets": 5}, fmt
 
 
 def test_roundtrip_complex_columns(tmp_path, spark):
@@ -423,22 +437,24 @@ def test_roundtrip_boolean_map_keys(tmp_path, spark):
     assert got.flags == {True: 7, False: 3}
 
 
-def test_sequence_state_beyond_long_range(spark):
+def test_sequence_state_beyond_long_range(tmp_path, spark):
     """decimal(38,0) serial keys past the long range must survive capture
-    exactly (a long cast would overflow or null the sequence out)."""
+    exactly (a long cast would overflow or null the sequence out), in zip
+    and directory dumps alike."""
     from decimal import Decimal
 
     from pyspark.sql import types as T
 
     from xdump_spark.catalog import Catalog
-    from xdump_spark.engine import sequence_state
 
     big = Decimal(2**70)
     df = spark.createDataFrame(
         [(big,)], T.StructType([T.StructField("id", T.DecimalType(38, 0), False)])
     )
     cat = Catalog({"t": df}, [], primary_keys={"t": "id"})
-    assert sequence_state({"t": df}, cat) == {"t": 2**70}
+    for fmt, loaded in _round_trips(tmp_path, spark, cat, full_tables=["t"]):
+        assert loaded.sequences == {"t": 2**70}, fmt
+        assert loaded.frames["t"].first().id == big, fmt
 
 
 def test_dump_enforces_small_selection_contract(tmp_path, engine):
@@ -476,3 +492,101 @@ def test_parquet_db_sequence_manifest_and_allocation(tmp_path, spark, engine):
     assert db.allocate_keys("employees") == [8]          # persisted advance
     assert db.sequences()["employees"] == 8
     assert db.allocate_keys("tickets") == [1]            # unknown table starts fresh
+
+
+def test_schema_only_zip_records_sequences(tmp_path, spark, engine):
+    """dump_data=False still captures sequence state: the export step's
+    noop action carries the same observation as a data dump's collect."""
+    out = str(tmp_path / "schema_only.zip")
+    counts = engine.dump(out, full_tables=["groups", "tickets"], dump_data=False)
+    assert counts == {"employees": 3, "groups": 2, "tickets": 5}
+    expected = {"employees": 3, "groups": 2, "tickets": 5}
+    assert DumpArchive(out).read_sequences() == expected
+    loaded = SparkDumpEngine(spark, engine.catalog).load(out)
+    assert loaded.frames == {}
+    assert loaded.sequences == expected
+
+
+@pytest.mark.parametrize("fmt", ["parquet", "csv"])
+def test_zip_and_directory_dumps_load_in_lockstep(tmp_path, spark, engine, fmt):
+    """One selection dumped as a zip and as a directory loads back to the
+    same rows, column types, FK edges and sequence state."""
+    selection = dict(
+        full_tables=["groups", "tickets"],
+        partial_tables={"employees": "SELECT * FROM employees WHERE id = 5"},
+    )
+    zip_path, dir_path = str(tmp_path / "d.zip"), str(tmp_path / "d")
+    assert engine.dump(zip_path, **selection) == engine.dump_distributed(
+        dir_path, fmt=fmt, **selection
+    )
+    z, d = engine.load(zip_path), engine.load(dir_path)
+    assert sorted(z.frames) == sorted(d.frames) == ["employees", "groups", "tickets"]
+    for table in z.frames:
+        assert z.frames[table].dtypes == d.frames[table].dtypes, table
+        assert sorted(map(tuple, z.frames[table].collect())) == sorted(
+            map(tuple, d.frames[table].collect())
+        ), table
+    def fk_dicts(loaded):
+        return sorted(sorted(fk.to_dict().items()) for fk in loaded.foreign_keys)
+
+    assert fk_dicts(z) == fk_dicts(d) and len(z.foreign_keys) == 4
+    assert z.sequences == d.sequences == {"employees": 5, "groups": 2, "tickets": 5}
+    assert z.load_order() == d.load_order()
+
+
+def test_directory_redump_commits_through_manifest(tmp_path, spark, engine, monkeypatch):
+    """A re-dump over an existing directory that fails part-way must not
+    leave a loadable mix of old and new tables: the old manifest goes
+    before the first table is overwritten, the new one is written last."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    out = str(tmp_path / "dist")
+    engine.dump_distributed(out, full_tables=["groups", "tickets"])
+    assert sorted(engine.load(out).frames) == ["employees", "groups", "tickets"]
+
+    real_parquet = DataFrameWriter.parquet
+    written = []
+
+    def second_write_fails(self, path, *args, **kwargs):
+        written.append(path)
+        if len(written) == 2:
+            raise IOError("injected write failure")
+        return real_parquet(self, path, *args, **kwargs)
+
+    selection = {"employees": "SELECT * FROM employees WHERE id = 2"}
+    monkeypatch.setattr(DataFrameWriter, "parquet", second_write_fails)
+    with pytest.raises(IOError, match="injected"):
+        engine.dump_distributed(out, partial_tables=selection)
+    monkeypatch.undo()
+    assert len(written) == 2   # the first table of the new dump was overwritten
+    with pytest.raises(FileNotFoundError, match="manifest.json"):
+        engine.load(out)
+
+    # a finished re-dump commits and loads only its own tables
+    assert engine.dump_distributed(out, partial_tables=selection) == {
+        "employees": 2, "groups": 1,
+    }
+    loaded = engine.load(out)
+    assert sorted(loaded.frames) == ["employees", "groups"]
+    assert ids(loaded.frames["employees"]) == {1, 2}
+
+
+def test_incremental_since_directory_dump(tmp_path, spark, engine, employees_catalog):
+    """dump_incremental reads a directory dump's sequence state through
+    the same loader as a zip's, and omits tables with no new rows."""
+    base = str(tmp_path / "base")
+    engine.dump_distributed(base, full_tables=["groups", "tickets"])
+
+    grown = SparkDumpEngine(spark, with_new_rows(spark, employees_catalog))
+    delta = str(tmp_path / "delta.zip")
+    counts = grown.dump_incremental(delta, since=base, full_tables=["groups", "tickets"])
+    assert counts == {"groups": 1, "employees": 1, "tickets": 1}
+    loaded = grown.load(delta)
+    assert ids(loaded.frames["groups"]) == {3}
+    assert ids(loaded.frames["employees"]) == {6}
+    assert ids(loaded.frames["tickets"]) == {6}
+    assert loaded.sequences == {"groups": 3, "employees": 6, "tickets": 6}
+
+    unchanged = str(tmp_path / "unchanged.zip")
+    assert engine.dump_incremental(unchanged, since=base, full_tables=["groups"]) == {}
+    assert engine.load(unchanged).frames == {}

@@ -6,9 +6,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from xdump_spark.archive import DumpArchive
-from xdump_spark.engine import SparkDumpEngine
+from xdump_spark.engine import SparkDumpEngine, read_manifest
 from xdump_spark.sources.parquet_db import ParquetDatabase
-from tests.conftest import ids
+from tests.conftest import ids, with_new_rows
 
 
 @pytest.fixture()
@@ -16,33 +16,11 @@ def engine(spark, employees_catalog):
     return SparkDumpEngine(spark, employees_catalog)
 
 
-def _with_new_rows(spark, catalog):
-    """The source after growth: one new group (id 3), two new employees
-    (ids 6,7 — 7 managed by OLD employee 3), one new ticket (id 6 by a
-    NEW employee)."""
-    new_groups = spark.createDataFrame([(3, "Guest")], catalog.tables["groups"].schema)
-    new_emps = spark.createDataFrame(
-        [(6, "New", "Hire", 3, None, 3), (7, "Also", "New", 3, None, 1)],
-        catalog.tables["employees"].schema,
-    )
-    new_tickets = spark.createDataFrame(
-        [(6, 6, "Sub 6", "Message 6")], catalog.tables["tickets"].schema
-    )
-    grown = catalog.with_table("groups", catalog.tables["groups"].unionByName(new_groups))
-    grown = grown.with_table(
-        "employees", catalog.tables["employees"].unionByName(new_emps)
-    )
-    grown = grown.with_table(
-        "tickets", catalog.tables["tickets"].unionByName(new_tickets)
-    )
-    return grown
-
-
 def test_incremental_captures_only_new_rows(tmp_path, spark, engine, employees_catalog):
     base_zip = str(tmp_path / "base.zip")
     engine.dump(base_zip, full_tables=["groups", "tickets"])  # pulls authors too
 
-    grown = _with_new_rows(spark, employees_catalog)
+    grown = with_new_rows(spark, employees_catalog)
     engine2 = SparkDumpEngine(spark, grown)
     delta_zip = str(tmp_path / "delta.zip")
     counts = engine2.dump_incremental(
@@ -68,7 +46,7 @@ def test_incremental_appends_onto_previous_target(tmp_path, spark, engine, emplo
     db_dir = str(tmp_path / "db")
     SparkDumpEngine(spark, engine.catalog).load(base_zip).write_parquet_db(db_dir)
 
-    grown = _with_new_rows(spark, employees_catalog)
+    grown = with_new_rows(spark, employees_catalog)
     delta_zip = str(tmp_path / "delta.zip")
     SparkDumpEngine(spark, grown).dump_incremental(
         delta_zip, since=base_zip, full_tables=["groups", "tickets"]
@@ -105,7 +83,7 @@ def test_cli_since_flag(tmp_path, spark, engine, employees_catalog):
     from xdump_spark import cli
 
     src = str(tmp_path / "srcdb")
-    grown = _with_new_rows(spark, employees_catalog)
+    grown = with_new_rows(spark, employees_catalog)
     for name, df in grown.tables.items():
         df.write.parquet(os.path.join(src, name))
     ParquetDatabase(spark, src).write_fk_config(grown.foreign_keys)
@@ -132,7 +110,7 @@ def test_config_and_framework_since(tmp_path, spark, engine, employees_catalog):
     from xdump_spark.framework import dump_command
 
     src = str(tmp_path / "srcdb")
-    grown = _with_new_rows(spark, employees_catalog)
+    grown = with_new_rows(spark, employees_catalog)
     for name, df in grown.tables.items():
         df.write.parquet(os.path.join(src, name))
     ParquetDatabase(spark, src).write_fk_config(grown.foreign_keys)
@@ -161,11 +139,10 @@ def test_incremental_anti_join_fallback_without_sequence(tmp_path, spark, engine
     by stripping it) falls back to the exact full-row anti-join."""
     base_zip = str(tmp_path / "base.zip")
     engine.dump(base_zip, full_tables=["groups"])
-    arc = DumpArchive(base_zip)
-    schema, seqs, data = arc.read_schema(), arc.read_sequences(), arc.read_data()
-    seqs.pop("groups")
+    manifest = read_manifest(spark, base_zip)
+    manifest["sequences"].pop("groups")
     stripped = str(tmp_path / "stripped.zip")
-    DumpArchive(stripped).write(schema, seqs, data, "deflated")
+    DumpArchive(stripped).write(manifest, DumpArchive(base_zip).read_data(), "deflated")
 
     grown = employees_catalog.with_table(
         "groups",

@@ -169,19 +169,20 @@ class DumpArchive:
     # -- write ------------------------------------------------------------
     def write(
         self,
-        schema: dict | None,
-        sequences: dict | None,
-        data: dict[str, bytes] | None,
+        manifest: dict | None,
+        data: dict[str, bytes],
         compression: str = "deflated",
     ) -> None:
+        """Pack ``engine.manifest`` as the schema and sequences members
+        (none for dump_schema=False), plus one CSV member per table."""
         comp = COMPRESSION[compression]
         with zipfile.ZipFile(self.path, "w", compression=comp) as zf:
-            if schema is not None:
+            if manifest is not None:
+                schema = {k: v for k, v in manifest.items() if k != "sequences"}
                 zf.writestr(SCHEMA_MEMBER, json.dumps(schema, indent=2))
-                zf.writestr(SEQUENCES_MEMBER, json.dumps(sequences or {}, indent=2))
-            if data:
-                for table, csv_bytes in data.items():
-                    zf.writestr(f"{DATA_DIR}{table}.csv", csv_bytes)
+                zf.writestr(SEQUENCES_MEMBER, json.dumps(manifest["sequences"], indent=2))
+            for table, csv_bytes in data.items():
+                zf.writestr(f"{DATA_DIR}{table}.csv", csv_bytes)
 
     # -- read -------------------------------------------------------------
     def namelist(self) -> list[str]:

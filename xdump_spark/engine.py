@@ -1,28 +1,35 @@
 """Dump/load orchestration — the reference's top-level ``backend.dump`` /
 ``backend.load`` lifecycle (xdump/base.py:87-106, 220-250) on Spark.
 
-dump(): validate → FK-closure over seeds → schema manifest + sequence
-state → per-table CSV into a zip. load(): schema manifest (optional) →
-CSV → typed DataFrames → write in FK-topological order.
-
-The driver-side CSV collect is intentional for the dump path: partial
-dumps are small by construction (the reference streams straight into a
-zip on one machine too). For big exports use ``dump_distributed`` which
-writes spark-native partitioned parquet/CSV instead.
+One dump format, packaged two ways (PAPER.md §1.1: a directory or zip of
+parts plus a schema manifest). ``dump`` collects each table to the driver
+as COPY-style CSV into a zip (partial dumps are small by construction; the
+reference streams into a zip on one machine too). ``dump_distributed``
+has executors write each table as parquet/CSV parts under a directory,
+and commits by writing ``manifest.json`` last. Both run one export action
+per table, whose Observation yields the row count and the sequence state;
+``manifest`` builds the one manifest, ``read_manifest`` reads it from
+either packaging, and ``load`` returns typed frames, FKs and sequences.
 """
 
 from __future__ import annotations
 
-import os
+import json
+from datetime import date, datetime
+from decimal import Decimal
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from xdump_spark import fsutil
 from xdump_spark.archive import DumpArchive, rows_to_csv, parse_csv_bytes
 from xdump_spark.catalog import Catalog, ForeignKey
 from xdump_spark.planner.closure import compute_closure, validate_tables
 from xdump_spark.timing import log_time, logger
+
+MANIFEST = "manifest.json"   # a directory dump's manifest, inside the directory
+_KEY_TYPE = T.DecimalType(38, 0)
 
 
 def toposort_tables(tables: list[str], fks: list[ForeignKey]) -> list[str]:
@@ -49,50 +56,61 @@ def toposort_tables(tables: list[str], fks: list[ForeignKey]) -> list[str]:
     return out
 
 
-def sequence_state(selections: dict[str, DataFrame], catalog: Catalog) -> dict[str, int]:
-    """Per-table max serial-key — the analog of dumping PostgreSQL
-    sequence positions so a loaded database continues numbering correctly
-    (reference: xdump/postgresql.py:136-146). Covers LEAF tables through
-    the catalog's explicit primary keys.
+def sequence_state(table: str, df: DataFrame, catalog: Catalog) -> Column:
+    """The aggregate that captures ``table``'s sequence position, its max
+    serial key — the analog of dumping PostgreSQL sequence positions so a
+    loaded database continues numbering correctly (reference:
+    xdump/postgresql.py:136-146). Covers LEAF tables through the catalog's
+    explicit primary keys; null for tables without a serial integer key.
+    Observed on the table's export action, so it runs no job of its own."""
+    pk = catalog.primary_key(table)
+    dt = df.schema[pk].dataType if pk is not None else None
+    # Sequence state only makes sense for serial integer keys;
+    # string/uuid keys carry no counter to restore. JDBC sources
+    # commonly surface serial keys as DecimalType(p, 0) (PostgreSQL
+    # numeric, Oracle NUMBER(10,0)) — those ARE integral.
+    if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)) or (
+        isinstance(dt, T.DecimalType) and dt.scale == 0
+    ):
+        # decimal(38,0), not long: a decimal(38,0) serial key can exceed
+        # the long range, where a long cast overflows (ANSI error) or
+        # silently nulls the sequence out
+        return F.max(pk).cast(_KEY_TYPE)
+    return F.lit(None).cast(_KEY_TYPE)
 
-    All per-table max aggregates run as ONE unioned Spark job (each leg is
-    a map-side max over its own scan) instead of a driver loop of one
-    collect per table."""
-    integral = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-    parts: list[DataFrame] = []
-    for table, df in sorted(selections.items()):
-        pk = catalog.primary_key(table)
-        if pk is None:
-            continue
-        dt = df.schema[pk].dataType
-        # Sequence state only makes sense for serial integer keys;
-        # string/uuid keys carry no counter to restore. JDBC sources
-        # commonly surface serial keys as DecimalType(p, 0) (PostgreSQL
-        # numeric, Oracle NUMBER(10,0)) — those ARE integral.
-        if not (
-            isinstance(dt, integral)
-            or (isinstance(dt, T.DecimalType) and dt.scale == 0)
-        ):
-            continue
-        parts.append(
-            df.agg(
-                F.lit(table).alias("table_name"),
-                # decimal(38,0), not long: a decimal(38,0) serial key can
-                # exceed the long range, where a long cast overflows
-                # (ANSI error) or silently nulls the sequence out
-                F.max(pk).cast(T.DecimalType(38, 0)).alias("max_key"),
-            )
-        )
-    if not parts:
-        return {}
-    merged = parts[0]
-    for p in parts[1:]:
-        merged = merged.unionByName(p)
+
+def manifest(selections: dict[str, DataFrame], fks: list[ForeignKey],
+             sequences: dict[str, int], fmt: str) -> dict:
+    """The dump manifest, one shape for both packagings: each table's
+    Spark schema, the FK edges inside the selection, the sequence state,
+    and the part format (``zip``, or a directory's ``parquet``/``csv``)."""
     return {
-        r["table_name"]: int(r["max_key"])   # exact: Python ints are unbounded
-        for r in merged.collect()
-        if r["max_key"] is not None
+        "format": fmt,
+        "tables": {t: {"spark_schema": df.schema.jsonValue()} for t, df in selections.items()},
+        "foreign_keys": [
+            fk.to_dict() for fk in fks if fk.table in selections and fk.foreign_table in selections
+        ],
+        "sequences": sequences,
     }
+
+
+def read_manifest(spark: SparkSession, path: str) -> dict:
+    """The manifest of a zip or directory dump. A zip written with
+    ``dump_schema=False`` reads as an empty one; a directory without a
+    manifest raises (not a dump, or its last dump did not finish)."""
+    if fsutil.is_dir(spark, path):
+        mpath = fsutil.join(path, MANIFEST)
+        if not fsutil.exists_atomic(spark, mpath):
+            raise FileNotFoundError(
+                f"{path} has no {MANIFEST}: not a dump directory, or its last dump did not finish"
+            )
+        return json.loads(fsutil.read_text_atomic(spark, mpath))
+    arc = DumpArchive(path)
+    schema = arc.read_schema()
+    if schema is None:
+        return manifest({}, [], {}, "zip")
+    # archives written before the manifest carried a format have none
+    return {"format": "zip", **schema, "sequences": arc.read_sequences()}
 
 
 class SparkDumpEngine:
@@ -109,6 +127,27 @@ class SparkDumpEngine:
             self.catalog, tuple(full_tables), dict(partial_tables or {}), spark=self.spark
         )
 
+    def _export(self, selections, sink) -> tuple[dict[str, int], dict[str, int]]:
+        """The export step: ``sink(table, df)`` runs one action per table,
+        and an Observation on it yields the row count and sequence state.
+        Returns ({table: rows}, {table: max serial key})."""
+        rows: dict[str, int] = {}
+        sequences: dict[str, int] = {}
+        for table, df in selections.items():
+            obs = Observation()
+            with log_time(f"export {table}", level=10):
+                sink(table, df.observe(
+                    obs,
+                    F.count(F.lit(1)).alias("rows"),
+                    sequence_state(table, df, self.catalog).alias("max_key"),
+                ))
+            got = obs.get
+            rows[table] = got["rows"]
+            if got["max_key"] is not None:
+                sequences[table] = int(got["max_key"])   # exact: Python ints are unbounded
+            logger.debug("%s: %d rows", table, rows[table])
+        return rows, sequences
+
     def dump(
         self,
         filename: str,
@@ -120,7 +159,7 @@ class SparkDumpEngine:
         max_driver_rows: int | None = 1_000_000,
     ) -> dict[str, int]:
         """Write the closure of (full_tables, partial_tables) as a zip.
-        Returns {table: rows written}. Mirrors backend.dump flags
+        Returns {table: rows selected}. Mirrors backend.dump flags
         (reference: xdump/base.py:87-106; tests/test_backend.py:142-162).
         Total and per-table wall time is logged like the reference's
         verbosity surface (xdump/base.py:24-35,98).
@@ -133,23 +172,14 @@ class SparkDumpEngine:
         ``dump_distributed`` for large selections, or pass
         ``max_driver_rows=None`` to opt out."""
         with log_time("total dump"):
-            return self._dump(
-                filename, full_tables, partial_tables, dump_schema, dump_data,
-                compression, max_driver_rows,
+            return self._dump_zip(
+                filename, self._select(full_tables, partial_tables), dump_schema,
+                dump_data, compression, max_driver_rows,
             )
 
-    def _dump(
-        self, filename, full_tables, partial_tables, dump_schema, dump_data,
-        compression, max_driver_rows=None,
-    ) -> dict[str, int]:
-        selections = self._select(full_tables, partial_tables)
-        return self._export(
-            filename, selections, dump_schema, dump_data, compression, max_driver_rows
-        )
-
-    def _export(
+    def _dump_zip(
         self, filename, selections, dump_schema, dump_data, compression,
-        max_driver_rows=None,
+        max_driver_rows, omit_empty=False,
     ) -> dict[str, int]:
         if dump_data and max_driver_rows is not None:
             for table, df in selections.items():
@@ -161,33 +191,22 @@ class SparkDumpEngine:
                         "selections (executors write partitioned parquet/CSV) "
                         "or raise max_driver_rows explicitly"
                     )
-        schema = None
-        sequences = None
-        if dump_schema:
-            schema = {
-                "tables": {
-                    name: {"spark_schema": df.schema.jsonValue()}
-                    for name, df in selections.items()
-                },
-                "foreign_keys": [
-                    fk.to_dict()
-                    for fk in self.catalog.foreign_keys
-                    if fk.table in selections and fk.foreign_table in selections
-                ],
-            }
-            sequences = sequence_state(selections, self.catalog)
         data: dict[str, bytes] = {}
-        counts: dict[str, int] = {}
-        if dump_data:
-            for table, df in selections.items():
-                with log_time(f"export {table}", level=10):
-                    cols = df.columns
-                    rows = [tuple(r) for r in df.collect()]
-                counts[table] = len(rows)
-                data[table] = rows_to_csv(cols, rows)
-                logger.debug("%s: %d rows", table, counts[table])
-        DumpArchive(filename).write(schema, sequences, data, compression)
-        return counts
+
+        def to_csv(table: str, df: DataFrame) -> None:
+            data[table] = rows_to_csv(df.columns, [tuple(r) for r in df.collect()])
+
+        def noop(table: str, df: DataFrame) -> None:   # schema-only: observe, write nothing
+            df.write.format("noop").mode("overwrite").save()
+
+        rows, sequences = self._export(selections, to_csv if dump_data else noop)
+        if omit_empty:
+            rows = {t: n for t, n in rows.items() if n}
+            selections = {t: df for t, df in selections.items() if t in rows}
+            data = {t: b for t, b in data.items() if t in rows}
+        m = manifest(selections, self.catalog.foreign_keys, sequences, "zip")
+        DumpArchive(filename).write(m if dump_schema else None, data, compression)
+        return rows
 
     def dump_incremental(
         self,
@@ -200,28 +219,27 @@ class SparkDumpEngine:
         compression: str = "deflated",
         max_driver_rows: int | None = 1_000_000,
     ) -> dict[str, int]:
-        """Delta dump: the ``dump`` selection MINUS every row already
-        captured by the ``since`` archive — the scale extension of the
-        reference's snapshot dump (re-exporting a 100 TB source per run
-        is not a plan; exporting the day's delta is).
+        """Delta dump into a zip: the ``dump`` selection MINUS every row
+        already captured by the ``since`` dump (zip or directory) — the
+        scale extension of the reference's snapshot dump (re-exporting a
+        100 TB source per run is not a plan; exporting the day's delta is).
 
         New rows are identified per table by serial key: key > the
-        since-archive's recorded sequence position (the reference dumps
+        since-dump's recorded sequence position (the reference dumps
         exactly this state to continue numbering after load,
         xdump/postgresql.py:136-146 — reused here as a high-watermark, so
         the filter PUSHES DOWN to the scan and old rows are never read).
         Tables without a recorded counter (no single serial key, e.g. a
         composite-key fact table) fall back to an exact full-row
-        anti-join against the since-archive's rows.
+        anti-join against the since-dump's rows.
 
-        Tables with no new rows are OMITTED from the archive; the load
-        path's skip-if-absent rule makes the delta loadable standalone
-        onto a previously-loaded target (append). Referential integrity
-        of the union holds by construction: a new child may reference an
-        old parent, and the old parent is already in the target.
+        Tables whose export action observes no new rows are OMITTED from
+        the archive; the load path's skip-if-absent rule makes the delta
+        loadable standalone onto a previously-loaded target (append).
+        Referential integrity of the union holds by construction: a new
+        child may reference an old parent, already in the target.
         """
-        prev = DumpArchive(since)
-        prev_seq = prev.read_sequences()
+        prev_seq = read_manifest(self.spark, since)["sequences"]
         prev_loaded: LoadedDump | None = None
         selections = self._select(full_tables, partial_tables or {})
         delta: dict[str, DataFrame] = {}
@@ -238,9 +256,9 @@ class SparkDumpEngine:
                     )
                 else:
                     delta[table] = df
-        delta = {t: d for t, d in delta.items() if d.limit(1).count() > 0}
-        return self._export(
-            filename, delta, dump_schema, dump_data, compression, max_driver_rows
+        return self._dump_zip(
+            filename, delta, dump_schema, dump_data, compression, max_driver_rows,
+            omit_empty=True,
         )
 
     def dump_distributed(
@@ -249,92 +267,71 @@ class SparkDumpEngine:
         full_tables: list[str] | tuple[str, ...] = (),
         partial_tables: dict[str, DataFrame | str] | None = None,
         fmt: str = "parquet",
-    ) -> list[str]:
-        """Scale path: write each selected table as partitioned parquet/CSV
-        under ``out_dir/<table>/`` with executors doing the IO (no driver
-        collect). Schema/FK manifest goes to ``out_dir/manifest.json``."""
-        import json
+    ) -> dict[str, int]:
+        """Scale path: executors write each selected table as partitioned
+        parquet/CSV under ``out_dir/<table>/`` (no driver collect). Returns
+        {table: rows written}. ``out_dir/manifest.json`` commits the dump:
+        the old one is deleted before the first table is overwritten and
+        the new one written last, atomically, so a re-dump that fails
+        part-way cannot load as a mix of two dumps' tables."""
+        with log_time("total dump"):
+            selections = self._select(full_tables, partial_tables)
+            mpath = fsutil.join(out_dir, MANIFEST)
+            # exists_atomic first finishes an interrupted manifest commit,
+            # so no leftover commit sibling can bring the old one back
+            if fsutil.exists_atomic(self.spark, mpath):
+                fsutil.delete(self.spark, mpath)
 
-        selections = self._select(full_tables, partial_tables)
-        for table, df in selections.items():
-            writer = df.write.mode("overwrite")
-            if fmt == "csv":
-                writer.option("header", True).option("nullValue", "").csv(
-                    os.path.join(out_dir, table)
-                )
-            else:
-                writer.parquet(os.path.join(out_dir, table))
-        manifest = {
-            "format": fmt,
-            "tables": {name: df.schema.jsonValue() for name, df in selections.items()},
-            "foreign_keys": [
-                fk.to_dict()
-                for fk in self.catalog.foreign_keys
-                if fk.table in selections and fk.foreign_table in selections
-            ],
-        }
-        os.makedirs(out_dir, exist_ok=True)
-        with open(os.path.join(out_dir, "manifest.json"), "w") as f:
-            json.dump(manifest, f, indent=2)
-        return sorted(selections)
+            def write_part(table: str, df: DataFrame) -> None:
+                part = fsutil.join(out_dir, table)
+                if fmt == "csv":
+                    df.write.csv(part, mode="overwrite", header=True, nullValue="")
+                else:
+                    df.write.parquet(part, mode="overwrite")
 
-    def load_distributed(self, out_dir: str) -> "LoadedDump":
-        """Read a ``dump_distributed`` directory back: typed frames come
-        straight off the partitioned parquet/CSV parts (executors do the
-        IO — the scale twin of ``load``, which parses driver-side CSV)."""
-        import json
-
-        with open(os.path.join(out_dir, "manifest.json")) as f:
-            manifest = json.load(f)
-        frames: dict[str, DataFrame] = {}
-        for table, schema_json in manifest["tables"].items():
-            st = T.StructType.fromJson(schema_json)
-            path = os.path.join(out_dir, table)
-            if manifest.get("format") == "csv":
-                frames[table] = (
-                    self.spark.read.option("header", True)
-                    .option("nullValue", "")
-                    .schema(st)
-                    .csv(path)
-                )
-            else:
-                frames[table] = self.spark.read.parquet(path)
-        fks = [ForeignKey.from_dict(d) for d in manifest.get("foreign_keys", [])]
-        return LoadedDump(frames, fks, {})
+            rows, sequences = self._export(selections, write_part)
+            m = manifest(selections, self.catalog.foreign_keys, sequences, fmt)
+            fsutil.write_text_atomic(self.spark, mpath, json.dumps(m))
+            return rows
 
     # ------------------------------------------------------------- load --
-    def load(self, filename: str) -> "LoadedDump":
-        """Parse an archive back into typed DataFrames (schema from the
-        manifest when present, else all-string columns — the reference
-        likewise loads without schema when schema.sql is absent,
-        docs/changelog.rst:26)."""
+    def load(self, path: str) -> "LoadedDump":
+        """Read a zip or directory dump back into typed DataFrames, FK
+        edges and sequence state. Zip frames are parsed from the CSV
+        members on the driver, typed by the manifest when present, else
+        all-string columns (the reference likewise loads without schema
+        when schema.sql is absent, docs/changelog.rst:26). Directory frames
+        are read by executors straight off the parquet/CSV parts."""
         with log_time("total load"):
-            return self._load(filename)
-
-    def _load(self, filename: str) -> "LoadedDump":
-        arc = DumpArchive(filename)
-        schema = arc.read_schema()
-        sequences = arc.read_sequences()
-        data = arc.read_data()
-        frames: dict[str, DataFrame] = {}
-        for table, csv_bytes in data.items():
-            header, rows = parse_csv_bytes(csv_bytes)
-            if schema and table in schema["tables"]:
-                st = T.StructType.fromJson(schema["tables"][table]["spark_schema"])
-                typed_rows = [
-                    tuple(_coerce(v, st[c].dataType) for v, c in zip(row, header))
-                    for row in rows
-                ]
-                frames[table] = self.spark.createDataFrame(typed_rows, st)
+            m = read_manifest(self.spark, path)
+            frames: dict[str, DataFrame] = {}
+            if m["format"] == "zip":
+                for table, csv_bytes in DumpArchive(path).read_data().items():
+                    header, rows = parse_csv_bytes(csv_bytes)
+                    st = (
+                        T.StructType.fromJson(m["tables"][table]["spark_schema"])
+                        if table in m["tables"]
+                        else T.StructType([T.StructField(c, T.StringType()) for c in header])
+                    )
+                    frames[table] = self.spark.createDataFrame(
+                        [tuple(_coerce(v, st[c].dataType) for v, c in zip(row, header))
+                         for row in rows],
+                        st,
+                    )
             else:
-                st = T.StructType([T.StructField(c, T.StringType(), True) for c in header])
-                frames[table] = self.spark.createDataFrame([tuple(r) for r in rows], st)
-        fks = (
-            [ForeignKey.from_dict(d) for d in schema.get("foreign_keys", [])]
-            if schema
-            else []
-        )
-        return LoadedDump(frames, fks, sequences)
+                for table, entry in m["tables"].items():
+                    part = fsutil.join(path, table)
+                    if m["format"] == "csv":
+                        st = T.StructType.fromJson(entry["spark_schema"])
+                        frames[table] = self.spark.read.schema(st).csv(
+                            part, header=True, nullValue=""
+                        )
+                    else:
+                        frames[table] = self.spark.read.parquet(part)
+            fks = [ForeignKey.from_dict(d) for d in m["foreign_keys"]]
+            return LoadedDump(frames, fks, m["sequences"])
+
+    load_distributed = load   # alias: callers of the old directory loader (perfbench/run.py)
 
 
 def _coerce(v: str | None, dt: T.DataType):
@@ -342,8 +339,6 @@ def _coerce(v: str | None, dt: T.DataType):
         return None
     if isinstance(dt, (T.ArrayType, T.MapType, T.StructType)):
         # complex cells are embedded as JSON by format_csv_value
-        import json
-
         return _from_jsonable(json.loads(v), dt)
     if isinstance(dt, (T.IntegerType, T.LongType, T.ShortType)):
         return int(v)
@@ -352,16 +347,10 @@ def _coerce(v: str | None, dt: T.DataType):
     if isinstance(dt, T.BooleanType):
         return v == "true"
     if isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
-        from datetime import datetime
-
         return datetime.fromisoformat(v)
     if isinstance(dt, T.DateType):
-        from datetime import date
-
         return date.fromisoformat(v)
     if isinstance(dt, T.DecimalType):
-        from decimal import Decimal
-
         return Decimal(v)
     if isinstance(dt, T.BinaryType):
         # format_csv_value writes bytes PG-COPY-style as \x<hex>
@@ -390,8 +379,6 @@ def _from_jsonable(o, dt: T.DataType):
     if isinstance(dt, (T.FloatType, T.DoubleType)):
         return float(o)
     if isinstance(dt, T.DecimalType):
-        from decimal import Decimal
-
         return Decimal(str(o))
     return o
 
@@ -417,7 +404,7 @@ class LoadedDump:
         reference's sequences.sql replay (xdump/base.py:227-237)."""
         order = self.load_order()
         for table in order:
-            self.frames[table].write.mode(mode).parquet(os.path.join(db_dir, table))
+            self.frames[table].write.mode(mode).parquet(fsutil.join(db_dir, table))
         if self.sequences:
             from xdump_spark.sources.parquet_db import ParquetDatabase
 

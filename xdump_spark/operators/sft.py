@@ -265,12 +265,6 @@ _TEMPLATES = {
 }
 
 
-def _render_msg(m: Column, template: str) -> Column:
-    pre, post = _TEMPLATES[template]
-    left, right = pre.split("{role}")
-    return F.concat(F.lit(left), m["role"], F.lit(right), m["content"], F.lit(post))
-
-
 def render_chat(
     df: DataFrame,
     conv_col: str = "messages",

@@ -12,8 +12,7 @@ Derby (on every Spark classpath — the Hive-metastore dependency): DDL +
 inserts through the driver JVM, metadata FK introspection, partitioned
 reads, snapshot staging, closure, dump/load, and a JDBC write-back
 (tests/test_jdbc_live.py). Networked databases additionally need their
-driver jar and a reachable server; the PG-specific FK query below covers
-the reference's PostgreSQL catalog shape.
+driver jar and a reachable server.
 """
 
 from __future__ import annotations
@@ -23,23 +22,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from xdump_spark.catalog import Catalog, ForeignKey
-
-# The reference's one-shot FK-catalog query (xdump/postgresql.py:19-62),
-# reusable through JDBC's query pushdown.
-PG_FOREIGN_KEYS_QUERY = """
-SELECT tc.constraint_name AS name,
-       tc.table_name      AS table,
-       kcu.column_name    AS column,
-       ccu.table_name     AS foreign_table,
-       ccu.column_name    AS foreign_column
-FROM information_schema.table_constraints tc
-JOIN information_schema.key_column_usage kcu
-  ON tc.constraint_name = kcu.constraint_name
-JOIN information_schema.constraint_column_usage ccu
-  ON ccu.constraint_name = tc.constraint_name
-WHERE tc.constraint_type = 'FOREIGN KEY'
-"""
-
 
 def jdbc_options(url: str, user: str | None = None, password: str | None = None,
                  driver: str | None = None) -> dict[str, str]:
@@ -93,19 +75,6 @@ def read_table(spark: SparkSession, options: dict[str, str], table: str,
     return reader.load()
 
 
-def introspect_foreign_keys(spark: SparkSession, options: dict[str, str]) -> list[ForeignKey]:
-    df = (
-        spark.read.format("jdbc")
-        .options(**options)
-        .option("query", PG_FOREIGN_KEYS_QUERY)
-        .load()
-    )
-    return [
-        ForeignKey(r["table"], r["column"], r["foreign_table"], r["foreign_column"], r["name"])
-        for r in df.collect()
-    ]
-
-
 def introspect_foreign_keys_metadata(
     spark: SparkSession,
     url: str,
@@ -115,8 +84,8 @@ def introspect_foreign_keys_metadata(
     """Portable FK introspection through ``java.sql.DatabaseMetaData``
     (driven in the driver JVM via the py4j gateway): `getImportedKeys` is
     part of the JDBC spec, so this works against ANY JDBC source —
-    including embedded Derby — where the information_schema query above is
-    PostgreSQL-shaped. Identifiers are folded to lowercase so catalogs
+    including embedded Derby — where the reference's information_schema
+    query is PostgreSQL-shaped. Identifiers are folded to lowercase so catalogs
     built over `spark.read.jdbc` frames and these edges agree on names.
 
     One driver-side metadata connection; no executor involvement — this is
